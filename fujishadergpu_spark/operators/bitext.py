@@ -44,6 +44,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from . import _spread_scan
+
 QUANT = 1e12
 
 
@@ -70,6 +72,9 @@ def _round_half_up(y: np.ndarray) -> np.ndarray:
     return np.where(y >= 0, np.floor(y + 0.5), np.ceil(y - 0.5)).astype(np.int64)
 
 
+_CAND_SCHEMA = "src_id long, tgt_id long, qcos long"
+
+
 def _candidate_scores_arrow(src: DataFrame, tgt: DataFrame) -> DataFrame:
     """NumPy twin of the expr candidate plan: same rows, same bits.
 
@@ -84,6 +89,8 @@ def _candidate_scores_arrow(src: DataFrame, tgt: DataFrame) -> DataFrame:
     production feeds ANN candidates into the same margin algebra and
     never materializes a full side)."""
     rows = tgt.select("vec_id", "embedding").collect()
+    if not rows:  # the expr plan's cross join with no targets
+        return src.sparkSession.createDataFrame([], _CAND_SCHEMA)
     t_ids = np.fromiter((r["vec_id"] for r in rows), np.int64, count=len(rows))
     t_unit = _unit_np(np.array([r["embedding"] for r in rows], dtype=np.float64))
     bc = src.sparkSession.sparkContext.broadcast((t_ids, t_unit))
@@ -106,11 +113,8 @@ def _candidate_scores_arrow(src: DataFrame, tgt: DataFrame) -> DataFrame:
                 }
             )
 
-    sel = src.select("vec_id", "embedding")
-    par = src.sparkSession.sparkContext.defaultParallelism
-    if sel.rdd.getNumPartitions() < par:
-        sel = sel.repartition(par)
-    return sel.mapInPandas(fn, "src_id long, tgt_id long, qcos long")
+    sel = _spread_scan(src.select("vec_id", "embedding"))
+    return sel.mapInPandas(fn, _CAND_SCHEMA)
 
 
 def _unit_rows(df: DataFrame, id_alias: str, emb_alias: str) -> DataFrame:

@@ -39,6 +39,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from . import _spread_scan
+
 
 def _tokens(text):
     return F.filter(F.split(text, "[ \n]+"), lambda t: t != "")
@@ -101,10 +103,7 @@ def bm25_topk(
                         ln.append(len(tk))
                 yield pd.DataFrame({"_doc": d, "_term": t, "_tf": c, "_dl": ln})
 
-        src = docs.select(id_col, text_col)
-        par = docs.sparkSession.sparkContext.defaultParallelism
-        if src.rdd.getNumPartitions() < par:
-            src = src.repartition(par)
+        src = _spread_scan(docs.select(id_col, text_col))
         tf = src.mapInPandas(build, "_doc long, _term string, _tf long, _dl long")
     else:
         tf = (

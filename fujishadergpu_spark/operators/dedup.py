@@ -36,6 +36,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import ArrayType, DoubleType, LongType
 
+from . import _spread_scan
+
 # Mersenne prime 2^31-1: with 31-bit hashes and a, b < p the product
 # a*h + b < 2^62 is exact in uint64, so ((a*h + b) mod p) is the
 # genuine Carter-Wegman universal family — not an overflow-wrapped
@@ -604,11 +606,8 @@ def _simhash_poly31_arrow(df: DataFrame, id_col: str, text_col: str) -> DataFram
         F.col(id_col).alias("_id"),
         F.lower(F.coalesce(F.col(text_col), F.lit(""))).alias("_lt"),
     )
-    par = df.sparkSession.sparkContext.defaultParallelism
-    if sel.rdd.getNumPartitions() < par:
-        sel = sel.repartition(par)
     return (
-        sel.select("_id", sig(F.col("_lt")).alias("_sh"))
+        _spread_scan(sel).select("_id", sig(F.col("_lt")).alias("_sh"))
         .where(F.col("_sh").isNotNull())
     )
 

@@ -55,6 +55,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import ArrayType, LongType
 
+from . import _spread_scan
 from .dedup import poly31_hash, poly31_hash_np, poly31_pows
 
 _P31 = (1 << 31) - 1
@@ -153,10 +154,7 @@ def _gram_occurrences(
     tests/test_dsir_arrow.py."""
     if impl == "arrow":
         gb = _gram_buckets_udf(buckets)
-        sel = df.select(*([id_col] if id_col else []), text_col)
-        par = df.sparkSession.sparkContext.defaultParallelism
-        if sel.rdd.getNumPartitions() < par:
-            sel = sel.repartition(par)  # one-split bench scan: spread the UDF
+        sel = _spread_scan(df.select(*([id_col] if id_col else []), text_col))
         if id_col is None:
             return sel.select(F.explode(gb(F.col(text_col))).alias("bucket"))
         return sel.select(

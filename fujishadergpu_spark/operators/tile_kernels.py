@@ -198,6 +198,18 @@ def unpack_grid(buf: bytes, w: int) -> np.ndarray:
     return np.frombuffer(buf, dtype=np.float64).reshape(w, w)
 
 
+def _tile_frame(z: int, tk: int, **cols) -> pd.DataFrame:
+    """One output row (z, x, y, **cols) for packed tile key tk."""
+    return pd.DataFrame(
+        {"z": [z], "x": [tk >> 32], "y": [tk & _MASK32], **{k: [v] for k, v in cols.items()}}
+    )
+
+
+def _core(a: np.ndarray, h: int) -> np.ndarray:
+    """The 256² core of a halo-expanded (256+2h)² array."""
+    return a[h : h + TILE_PX, h : h + TILE_PX] if h else a
+
+
 def rasterize_tiles(
     points: DataFrame,
     z: int,
@@ -218,14 +230,7 @@ def rasterize_tiles(
         grid = _accumulate_grid(pdf, z, halo, weight_col)
         if log_scale:
             grid = np.log1p(grid)
-        return pd.DataFrame(
-            {
-                "z": [z],
-                "x": [int(pdf["_tk"].iloc[0]) >> 32],
-                "y": [int(pdf["_tk"].iloc[0]) & _MASK32],
-                "grid": [pack_grid(grid)],
-            }
-        )
+        return _tile_frame(z, int(pdf["_tk"].iloc[0]), grid=pack_grid(grid))
 
     schema = "z int, x long, y long, grid binary"
     return pts.groupBy("_tk").applyInPandas(fn, schema)
@@ -435,6 +440,65 @@ def kernel_halo(kernel: str, params: dict | None = None) -> int:
     return min(int(h), TILE_PX - 1)
 
 
+def _check_metric_scale(kernel: str, kernel_params: dict, metric_scale: bool) -> None:
+    """metric_scale=True needs a METRIC_SCALE_KERNELS kernel and no
+    explicit pixel_scale."""
+    if not metric_scale:
+        return
+    if kernel not in METRIC_SCALE_KERNELS:
+        raise ValueError(
+            f"kernel {kernel!r} does not consume metric pixel scales; "
+            f"supported: {sorted(METRIC_SCALE_KERNELS)}"
+        )
+    if "pixel_scale" in kernel_params:
+        raise ValueError("pass either metric_scale=True or an explicit pixel_scale, not both")
+
+
+def _stencil_step(
+    kernel: str, kernel_params: dict, z: int, h: int, log_scale: bool, metric_scale: bool
+):
+    """The per-tile step every stencil path runs, as
+    ``step(grid, tk, fill=None) -> core``: on tile tk's halo-expanded
+    (256+2h)² grid, the optional ``fill(grid, tx, ty)`` (cast back to
+    the grid's dtype), log1p, the tile's metric pixel scales, the
+    kernel, then the core crop — the reference's
+    map_overlap(kernel, depth) + core crop (reference
+    core/tile_processor.py:944-971)."""
+    fn_kernel, _ = KERNELS[kernel]
+
+    def step(grid: np.ndarray, tk: int, fill=None) -> np.ndarray:
+        ty = tk & _MASK32
+        if fill is not None:
+            grid = fill(grid, tk >> 32, ty).astype(grid.dtype, copy=False)
+        if log_scale:
+            grid = np.log1p(grid)
+        params = kernel_params
+        if metric_scale:
+            params = dict(kernel_params, pixel_scale=tile_pixel_scales(ty, z))
+        return _core(fn_kernel(grid, **params), h)
+
+    return step
+
+
+_RESULT_SCHEMA = "z int, x long, y long, result array<double>"
+_STATS_SCHEMA = "z int, x long, y long, shade_sum double, shade_max double, lit_pixels long"
+
+
+def _core_frame(z: int, tk: int, core: np.ndarray, lit_threshold: float | None) -> pd.DataFrame:
+    """Output row for a kernel core: the raw 256² result
+    (_RESULT_SCHEMA), or with lit_threshold set the per-tile stats
+    reduction (_STATS_SCHEMA; sums in float64 whatever the grid
+    dtype)."""
+    if lit_threshold is None:
+        return _tile_frame(z, tk, result=core.ravel())
+    return _tile_frame(
+        z, tk,
+        shade_sum=float(core.sum(dtype=np.float64)),
+        shade_max=float(core.max()),
+        lit_pixels=int((core > lit_threshold).sum()),
+    )
+
+
 def tile_kernel(
     points: DataFrame,
     z: int,
@@ -472,123 +536,10 @@ def tile_kernel(
     log_scale + kernel (applied to the full halo-expanded grid, so the
     fill is seam-free like everything else).
     """
-    fn_kernel, _ = KERNELS[kernel]
-    if metric_scale:
-        if kernel not in METRIC_SCALE_KERNELS:
-            raise ValueError(
-                f"kernel {kernel!r} does not consume metric pixel scales; "
-                f"supported: {sorted(METRIC_SCALE_KERNELS)}"
-            )
-        if "pixel_scale" in kernel_params:
-            raise ValueError("pass either metric_scale=True or an explicit pixel_scale, not both")
-    if skip_empty_core and fill_surface is not None:
-        # the skip path returns empty for groups holding only halo
-        # spill-ins, and _synth_filled_tiles excludes those tiles as
-        # "present" — the membrane would silently never materialize
-        # for exactly the tiles whose window holds only neighbors'
-        # points. The combination is contradictory (skip wants to drop
-        # sparse tiles, fill wants to repair them), so refuse it.
-        raise ValueError("skip_empty_core=True cannot be combined with fill_surface")
-    h = kernel_halo(kernel, kernel_params) if halo is None else halo
-    pts = _packed_tiles(points, z, h, weight_col)
-    if skip_empty_core:
-        pts = _with_core_flag(pts)
-
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        if skip_empty_core:
-            if not pdf[_CORE_FLAG].to_numpy().any():
-                return pd.DataFrame(
-                    {
-                        "z": pd.Series(dtype="int32"),
-                        "x": pd.Series(dtype="int64"),
-                        "y": pd.Series(dtype="int64"),
-                        "result": pd.Series(dtype="object"),
-                    }
-                )
-            pdf = pdf.drop(columns=[_CORE_FLAG])
-        tk = int(pdf["_tk"].iloc[0])
-        grid = _accumulate_grid(pdf, z, h, weight_col)
-        if fill_surface is not None:
-            grid = fill_surface.apply(grid, tk >> 32, tk & _MASK32, z, h)
-        if log_scale:
-            grid = np.log1p(grid)
-        params = kernel_params
-        if metric_scale:
-            params = dict(kernel_params, pixel_scale=tile_pixel_scales(tk & _MASK32, z))
-        out = fn_kernel(grid, **params)
-        core = out[h : h + TILE_PX, h : h + TILE_PX] if h else out
-        return pd.DataFrame(
-            {
-                "z": [z],
-                "x": [tk >> 32],
-                "y": [tk & _MASK32],
-                "result": [core.ravel()],
-            }
-        )
-
-    schema = "z int, x long, y long, result array<double>"
-    out = pts.groupBy("_tk").applyInPandas(fn, schema)
-    if fill_surface is None:
-        return out
-    return out.unionByName(
-        _synth_filled_tiles(
-            points, pts, z, h, fill_surface, log_scale, metric_scale,
-            fn_kernel, kernel_params, schema, stats=False,
-        )
+    return _kernel_tiles(
+        points, z, kernel, halo, weight_col, log_scale, fill_surface, metric_scale,
+        kernel_params, dtype=np.float64, skip_empty_core=skip_empty_core,
     )
-
-
-def _synth_filled_tiles(
-    points, pts, z, h, fill_surface, log_scale, metric_scale,
-    fn_kernel, kernel_params, schema, stats, lit_threshold=0.75,
-):
-    """Kernel output for fillable tiles that own NO points (core or
-    halo): such tiles have no shuffle rows, so no group ever forms and
-    the membrane would silently not materialize there (whole-tile
-    enclosed voids). Candidates come from the broadcast surface
-    (driver-enumerated, bounded), minus the tiles the point path
-    already produced — deterministic, partition-independent."""
-    spark = points.sparkSession
-    tks = fill_surface.fillable_tile_keys(z)
-    if tks.size == 0:
-        return spark.createDataFrame([], schema)
-    cand = spark.createDataFrame(pd.DataFrame({"_tk": tks}))
-    present = pts.select("_tk").distinct()
-    missing = cand.join(present, "_tk", "left_anti").repartition(
-        max(2, spark.sparkContext.defaultParallelism)
-    )
-
-    def fn_missing(it):
-        for pdf in it:
-            cols: dict[str, list] = (
-                {"z": [], "x": [], "y": [], "shade_sum": [], "shade_max": [], "lit_pixels": []}
-                if stats
-                else {"z": [], "x": [], "y": [], "result": []}
-            )
-            for tk in pdf["_tk"].astype("int64"):
-                tk = int(tk)
-                tx, ty = tk >> 32, tk & _MASK32
-                w_ = TILE_PX + 2 * h
-                grid = fill_surface.apply(np.zeros((w_, w_)), tx, ty, z, h)
-                if log_scale:
-                    grid = np.log1p(grid)
-                params = kernel_params
-                if metric_scale:
-                    params = dict(kernel_params, pixel_scale=tile_pixel_scales(ty, z))
-                o = fn_kernel(grid, **params)
-                core = o[h : h + TILE_PX, h : h + TILE_PX] if h else o
-                cols["z"].append(z)
-                cols["x"].append(tx)
-                cols["y"].append(ty)
-                if stats:
-                    cols["shade_sum"].append(float(core.sum(dtype=np.float64)))
-                    cols["shade_max"].append(float(core.max()))
-                    cols["lit_pixels"].append(int((core > lit_threshold).sum()))
-                else:
-                    cols["result"].append(core.ravel())
-            yield pd.DataFrame(cols)
-
-    return missing.mapInPandas(fn_missing, schema)
 
 
 def tile_kernel_stats(
@@ -617,56 +568,95 @@ def tile_kernel_stats(
     (~1e-7 relative) would leak above the quantized-sum tolerance;
     production renders never need it (cf. normalize_acctbal's
     oracle-only exact percentile)."""
-    fn_kernel, _ = KERNELS[kernel]
-    if metric_scale:
-        if kernel not in METRIC_SCALE_KERNELS:
-            raise ValueError(
-                f"kernel {kernel!r} does not consume metric pixel scales; "
-                f"supported: {sorted(METRIC_SCALE_KERNELS)}"
-            )
-        if "pixel_scale" in kernel_params:
-            raise ValueError("pass either metric_scale=True or an explicit pixel_scale, not both")
+    # float32 end-to-end by default: the stats path never leaves the
+    # UDF, so halving memory traffic is free accuracy-wise (sums are
+    # done in float64) — the reference's quantize-before-transfer
+    # discipline applied to bandwidth instead of PCIe
+    return _kernel_tiles(
+        points, z, kernel, halo, weight_col, log_scale, fill_surface, metric_scale,
+        kernel_params, dtype=np.float32 if grid_dtype is None else grid_dtype,
+        lit_threshold=lit_threshold,
+    )
+
+
+def _kernel_tiles(
+    points, z, kernel, halo, weight_col, log_scale, fill_surface, metric_scale,
+    kernel_params, *, dtype, lit_threshold=None, skip_empty_core=False,
+) -> DataFrame:
+    """The one grouped-map stage behind tile_kernel and
+    tile_kernel_stats: grids accumulate in ``dtype``, run
+    _stencil_step, and leave as _core_frame rows; a fill surface adds
+    its point-less tiles."""
+    _check_metric_scale(kernel, kernel_params, metric_scale)
+    if skip_empty_core and fill_surface is not None:
+        # the skip path returns empty for groups holding only halo
+        # spill-ins, and _synth_filled_tiles excludes those tiles as
+        # "present" — the membrane would silently never materialize
+        # for exactly the tiles whose window holds only neighbors'
+        # points. The combination is contradictory (skip wants to drop
+        # sparse tiles, fill wants to repair them), so refuse it.
+        raise ValueError("skip_empty_core=True cannot be combined with fill_surface")
     h = kernel_halo(kernel, kernel_params) if halo is None else halo
+    step = _stencil_step(kernel, kernel_params, z, h, log_scale, metric_scale)
+    fill = None if fill_surface is None else (lambda g, tx, ty: fill_surface.apply(g, tx, ty, z, h))
     pts = _packed_tiles(points, z, h, weight_col)
+    if skip_empty_core:
+        pts = _with_core_flag(pts)
 
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        # float32 end-to-end: the stats path never leaves the UDF, so
-        # halving memory traffic is free accuracy-wise (sums are done
-        # in float64) — the reference's quantize-before-transfer
-        # discipline applied to bandwidth instead of PCIe
+        if skip_empty_core:
+            if not pdf[_CORE_FLAG].to_numpy().any():
+                return pd.DataFrame(
+                    {
+                        "z": pd.Series(dtype="int32"),
+                        "x": pd.Series(dtype="int64"),
+                        "y": pd.Series(dtype="int64"),
+                        "result": pd.Series(dtype="object"),
+                    }
+                )
+            pdf = pdf.drop(columns=[_CORE_FLAG])
         tk = int(pdf["_tk"].iloc[0])
-        dt = np.float32 if grid_dtype is None else grid_dtype
-        grid = _accumulate_grid(pdf, z, h, weight_col, dtype=dt)
-        if fill_surface is not None:
-            grid = fill_surface.apply(grid, tk >> 32, tk & _MASK32, z, h).astype(dt)
-        if log_scale:
-            grid = np.log1p(grid)
-        params = kernel_params
-        if metric_scale:
-            params = dict(kernel_params, pixel_scale=tile_pixel_scales(tk & _MASK32, z))
-        out = fn_kernel(grid, **params)
-        core = out[h : h + TILE_PX, h : h + TILE_PX] if h else out
-        return pd.DataFrame(
-            {
-                "z": [z],
-                "x": [tk >> 32],
-                "y": [tk & _MASK32],
-                "shade_sum": [float(core.sum(dtype=np.float64))],
-                "shade_max": [float(core.max())],
-                "lit_pixels": [int((core > lit_threshold).sum())],
-            }
-        )
+        grid = _accumulate_grid(pdf, z, h, weight_col, dtype=dtype)
+        return _core_frame(z, tk, step(grid, tk, fill), lit_threshold)
 
-    schema = "z int, x long, y long, shade_sum double, shade_max double, lit_pixels long"
+    schema = _RESULT_SCHEMA if lit_threshold is None else _STATS_SCHEMA
     out = pts.groupBy("_tk").applyInPandas(fn, schema)
     if fill_surface is None:
         return out
     return out.unionByName(
-        _synth_filled_tiles(
-            points, pts, z, h, fill_surface, log_scale, metric_scale,
-            fn_kernel, kernel_params, schema, stats=True, lit_threshold=lit_threshold,
-        )
+        _synth_filled_tiles(pts, z, h, fill_surface, step, fill, lit_threshold, schema)
     )
+
+
+def _synth_filled_tiles(pts, z, h, fill_surface, step, fill, lit_threshold, schema):
+    """Kernel output for fillable tiles that own NO points (core or
+    halo): such tiles have no shuffle rows, so no group ever forms and
+    the membrane would silently not materialize there (whole-tile
+    enclosed voids). Candidates come from the broadcast surface
+    (driver-enumerated, bounded), minus the tiles the point path
+    already produced — deterministic, partition-independent. Their
+    grids start as float64 zeros whatever the point path's dtype."""
+    spark = pts.sparkSession
+    tks = fill_surface.fillable_tile_keys(z)
+    if tks.size == 0:
+        return spark.createDataFrame([], schema)
+    cand = spark.createDataFrame(pd.DataFrame({"_tk": tks}))
+    present = pts.select("_tk").distinct()
+    missing = cand.join(present, "_tk", "left_anti").repartition(
+        max(2, spark.sparkContext.defaultParallelism)
+    )
+    w = TILE_PX + 2 * h
+
+    def fn_missing(it):
+        for pdf in it:
+            frames = [
+                _core_frame(z, tk, step(np.zeros((w, w)), tk, fill), lit_threshold)
+                for tk in map(int, pdf["_tk"])
+            ]
+            if frames:
+                yield pd.concat(frames, ignore_index=True)
+
+    return missing.mapInPandas(fn_missing, schema)
 
 
 # ------------------- halo-contract census operators ------------------
@@ -689,15 +679,9 @@ def tile_halo_census(points: DataFrame, z: int, halo: int) -> DataFrame:
 
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
         grid = _accumulate_grid(pdf, z, halo, None)
-        core = grid[halo : halo + TILE_PX, halo : halo + TILE_PX] if halo else grid
-        return pd.DataFrame(
-            {
-                "z": [z],
-                "x": [int(pdf["_tk"].iloc[0]) >> 32],
-                "y": [int(pdf["_tk"].iloc[0]) & _MASK32],
-                "win_pts": [int(grid.sum())],
-                "core_pts": [int(core.sum())],
-            }
+        return _tile_frame(
+            z, int(pdf["_tk"].iloc[0]),
+            win_pts=int(grid.sum()), core_pts=int(_core(grid, halo).sum()),
         )
 
     return pts.groupBy("_tk").applyInPandas(fn, "z int, x long, y long, win_pts long, core_pts long")
@@ -715,15 +699,9 @@ def tile_weighted_census(
 
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
         grid = _accumulate_grid(pdf, z, halo, weight_col)
-        core = grid[halo : halo + TILE_PX, halo : halo + TILE_PX] if halo else grid
-        return pd.DataFrame(
-            {
-                "z": [z],
-                "x": [int(pdf["_tk"].iloc[0]) >> 32],
-                "y": [int(pdf["_tk"].iloc[0]) & _MASK32],
-                "win_weight": [int(grid.sum())],
-                "core_weight": [int(core.sum())],
-            }
+        return _tile_frame(
+            z, int(pdf["_tk"].iloc[0]),
+            win_weight=int(grid.sum()), core_weight=int(_core(grid, halo).sum()),
         )
 
     return pts.groupBy("_tk").applyInPandas(
@@ -745,16 +723,10 @@ def tile_box_total(points: DataFrame, z: int, r: int) -> DataFrame:
 
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
         grid = _accumulate_grid(pdf, z, r, None)
-        tot = np_box_total(grid, r)[r : r + TILE_PX, r : r + TILE_PX]
-        core = grid[r : r + TILE_PX, r : r + TILE_PX]
-        return pd.DataFrame(
-            {
-                "z": [z],
-                "x": [int(pdf["_tk"].iloc[0]) >> 32],
-                "y": [int(pdf["_tk"].iloc[0]) & _MASK32],
-                "box_total": [int(tot.sum())],
-                "core_pts": [int(core.sum())],
-            }
+        return _tile_frame(
+            z, int(pdf["_tk"].iloc[0]),
+            box_total=int(_core(np_box_total(grid, r), r).sum()),
+            core_pts=int(_core(grid, r).sum()),
         )
 
     return pts.groupBy("_tk").applyInPandas(fn, "z int, x long, y long, box_total long, core_pts long")

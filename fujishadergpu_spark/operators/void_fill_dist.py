@@ -48,6 +48,8 @@ the part that needs full zc resolution.
 
 from __future__ import annotations
 
+from functools import partial
+
 import numpy as np
 import pandas as pd
 from pyspark import StorageLevel
@@ -61,7 +63,19 @@ from .np_filters import (
     pushpull_pull_step,
     pushpull_push_step,
 )
-from .tile_kernels import pack_grid, rasterize_tiles, unpack_grid
+from .tile_kernels import (
+    _MASK32,
+    _STATS_SCHEMA,
+    _accumulate_grid,
+    _check_metric_scale,
+    _core_frame,
+    _packed_tiles,
+    _stencil_step,
+    kernel_halo,
+    pack_grid,
+    rasterize_tiles,
+    unpack_grid,
+)
 from .void_fill import VoidFillSurface, _exterior_voids
 
 _LVL_SCHEMA = "x long, y long, vw binary, w binary"
@@ -282,11 +296,9 @@ def _classify_fillable(points: DataFrame, zcls: int, mode: str) -> np.ndarray:
     """Bool fillable mask at the BOUNDED classify zoom zcls (driver
     connectivity BFS over a <=(2^4·256)² grid — the reference's
     bounded-overview read, reference io/dem_preprocess.py:527-640)."""
-    from .tile_kernels import rasterize_tiles as _rt
-
     n_cls = (1 << zcls) * TILE_PX
     world_cls = np.zeros((n_cls, n_cls), dtype=np.float64)
-    for r in _rt(points, zcls).collect():
+    for r in rasterize_tiles(points, zcls).collect():
         world_cls[r["y"] * TILE_PX : (r["y"] + 1) * TILE_PX,
                   r["x"] * TILE_PX : (r["x"] + 1) * TILE_PX] = unpack_grid(r["grid"], TILE_PX)
     if mode == "enclosed":
@@ -316,7 +328,6 @@ def _membrane_axis(g: np.ndarray, s: int, n_coarse: int) -> tuple[np.ndarray, np
 
 _REQ_SCHEMA = "ck long, tk long, y0 long, y1 long, x0 long, x1 long"
 _PIECE_SCHEMA2 = "tk long, ry0 long, rx0 long, nr int, nc int, piece binary"
-_STATS_SCHEMA = "z int, x long, y long, shade_sum double, shade_max double, lit_pixels long"
 
 
 def tile_kernel_stats_filled(
@@ -356,28 +367,11 @@ def tile_kernel_stats_filled(
     (bounded); shuffles are the normal 16-B point rows + per-tile
     patch pieces (≤ a few tile-bytes each, shrinking 4^s with the
     zoom gap); no all-pairs, no unbounded collect."""
-    from .tile_kernels import (
-        KERNELS,
-        METRIC_SCALE_KERNELS,
-        _MASK32,
-        _accumulate_grid,
-        _packed_tiles,
-        kernel_halo,
-        tile_pixel_scales,
-    )
-
     if mode not in ("enclosed", "all"):
         raise ValueError(f"unknown void-fill mode {mode!r} (enclosed/all)")
     if zc > z:
         raise ValueError(f"zc={zc} must be <= z={z}")
-    fn_kernel, _ = KERNELS[kernel]
-    if metric_scale and kernel not in METRIC_SCALE_KERNELS:
-        raise ValueError(
-            f"kernel {kernel!r} does not consume metric pixel scales; "
-            f"supported: {sorted(METRIC_SCALE_KERNELS)}"
-        )
-    if metric_scale and "pixel_scale" in kernel_params:
-        raise ValueError("pass either metric_scale=True or an explicit pixel_scale, not both")
+    _check_metric_scale(kernel, kernel_params, metric_scale)
     h = kernel_halo(kernel, kernel_params) if halo is None else halo
     w = TILE_PX + 2 * h
     s = z - zc
@@ -475,63 +469,49 @@ def tile_kernel_stats_filled(
     # ---- kernel: point rows cogrouped with membrane pieces ----
     dt = np.float32 if grid_dtype is None else grid_dtype
     scale = 0.25 ** s
+    step = _stencil_step(kernel, kernel_params, z, h, log_scale, metric_scale)
+
+    def membrane_fill(pc: pd.DataFrame, grid: np.ndarray, tx: int, ty: int) -> np.ndarray:
+        # assemble the patch: rows are one contiguous run (y never
+        # wraps), columns up to two runs (antimeridian), sorted by
+        # global coarse x — consecutive (i0, i0+1) pairs are always
+        # adjacent in the sorted unique needed set
+        ymin = int(pc["ry0"].min())
+        nrows = int((pc["ry0"] + pc["nr"]).max()) - ymin
+        runs = sorted({(int(r["rx0"]), int(r["nc"])) for _, r in pc.iterrows()})
+        col_globals = np.concatenate([np.arange(x0, x0 + nc) for x0, nc in runs])
+        patch = np.zeros((nrows, len(col_globals)), dtype=np.float64)
+        for _, r in pc.iterrows():
+            a = np.frombuffer(r["piece"], dtype=np.float64).reshape(r["nr"], r["nc"])
+            c0 = int(np.searchsorted(col_globals, int(r["rx0"])))
+            patch[int(r["ry0"]) - ymin : int(r["ry0"]) - ymin + int(r["nr"]),
+                  c0 : c0 + int(r["nc"])] = a
+        gy, gx = _halo_pixel_coords(tx, ty, z, h)
+        iy0, fy = _membrane_axis(gy, s, n_coarse)
+        ix0, fx = _membrane_axis(gx, s, n_coarse)
+        ly = iy0 - ymin
+        lx = np.searchsorted(col_globals, ix0)
+        tl = patch[ly[:, None], lx[None, :]]
+        tr = patch[ly[:, None], lx[None, :] + 1]
+        bl = patch[ly[:, None] + 1, lx[None, :]]
+        br = patch[ly[:, None] + 1, lx[None, :] + 1]
+        fyc, fxc = fy[:, None], fx[None, :]
+        memb = (tl * (1 - fyc) * (1 - fxc) + tr * (1 - fyc) * fxc
+                + bl * fyc * (1 - fxc) + br * fyc * fxc) * scale
+        out = grid.copy()
+        np.copyto(out, memb, where=(grid == 0) & gate_of(tx, ty))
+        return out
 
     def run(key, pdf: pd.DataFrame, pc: pd.DataFrame) -> pd.DataFrame:
         tk = int(key[0])
-        tx, ty = tk >> 32, tk & _MASK32
         if len(pdf):
             grid = _accumulate_grid(pdf, z, h, None, dtype=dt)
         else:
             # piece-only group: a fillable tile owning no points — the
             # cogroup analog of _synth_filled_tiles (same float64 zeros)
             grid = np.zeros((w, w))
-        if len(pc):
-            # assemble the patch: rows are one contiguous run (y never
-            # wraps), columns up to two runs (antimeridian), sorted by
-            # global coarse x — consecutive (i0, i0+1) pairs are always
-            # adjacent in the sorted unique needed set
-            ymin = int(pc["ry0"].min())
-            nrows = int((pc["ry0"] + pc["nr"]).max()) - ymin
-            runs = sorted({(int(r["rx0"]), int(r["nc"])) for _, r in pc.iterrows()})
-            col_globals = np.concatenate([np.arange(x0, x0 + nc) for x0, nc in runs])
-            patch = np.zeros((nrows, len(col_globals)), dtype=np.float64)
-            for _, r in pc.iterrows():
-                a = np.frombuffer(r["piece"], dtype=np.float64).reshape(r["nr"], r["nc"])
-                c0 = int(np.searchsorted(col_globals, int(r["rx0"])))
-                patch[int(r["ry0"]) - ymin : int(r["ry0"]) - ymin + int(r["nr"]),
-                      c0 : c0 + int(r["nc"])] = a
-            gy, gx = _halo_pixel_coords(tx, ty, z, h)
-            iy0, fy = _membrane_axis(gy, s, n_coarse)
-            ix0, fx = _membrane_axis(gx, s, n_coarse)
-            ly = iy0 - ymin
-            lx = np.searchsorted(col_globals, ix0)
-            tl = patch[ly[:, None], lx[None, :]]
-            tr = patch[ly[:, None], lx[None, :] + 1]
-            bl = patch[ly[:, None] + 1, lx[None, :]]
-            br = patch[ly[:, None] + 1, lx[None, :] + 1]
-            fyc, fxc = fy[:, None], fx[None, :]
-            memb = (tl * (1 - fyc) * (1 - fxc) + tr * (1 - fyc) * fxc
-                    + bl * fyc * (1 - fxc) + br * fyc * fxc) * scale
-            out = grid.copy()
-            np.copyto(out, memb, where=(grid == 0) & gate_of(tx, ty))
-            grid = out.astype(dt) if len(pdf) else out
-        if log_scale:
-            grid = np.log1p(grid)
-        params = kernel_params
-        if metric_scale:
-            params = dict(kernel_params, pixel_scale=tile_pixel_scales(ty, z))
-        o = fn_kernel(grid, **params)
-        core = o[h : h + TILE_PX, h : h + TILE_PX] if h else o
-        return pd.DataFrame(
-            {
-                "z": [z],
-                "x": [tx],
-                "y": [ty],
-                "shade_sum": [float(core.sum(dtype=np.float64))],
-                "shade_max": [float(core.max())],
-                "lit_pixels": [int((core > lit_threshold).sum())],
-            }
-        )
+        fill = partial(membrane_fill, pc) if len(pc) else None
+        return _core_frame(z, tk, step(grid, tk, fill), lit_threshold)
 
     return (
         pts.groupBy("_tk")

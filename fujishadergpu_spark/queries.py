@@ -34,7 +34,7 @@ from pyspark.sql import functions as F
 from .functions import cells, geoparse, textfn, urlnorm
 from .functions.cells import cell_of_sql
 from .functions.tiles import tile_pixel, tile_xy_sql
-from .operators import ann, components, dedup
+from .operators import _spread_scan, ann, components, dedup
 from .operators.knn import knn
 from .operators.hits import hits
 from .operators.anchors import anchor_body_divergence, anchor_topk
@@ -3060,13 +3060,9 @@ def _synth_text_map(d: DataFrame, fn) -> DataFrame:
 
         return pd.Series([fn(i, t) for i, t in zip(ids, texts)])
 
-    sel = d.select("doc_id", "text")
     # the bench corpus parquet is one split; spread the synthesis UDF
-    # and the per-doc arrow consumers over the cluster (scale-adaptive
-    # — a real corpus already scans as many splits)
-    par = d.sparkSession.sparkContext.defaultParallelism
-    if sel.rdd.getNumPartitions() < par:
-        sel = sel.repartition(par)
+    # and the per-doc arrow consumers over the cluster
+    sel = _spread_scan(d.select("doc_id", "text"))
     return sel.select("doc_id", synth("doc_id", "text").alias("text"))
 
 

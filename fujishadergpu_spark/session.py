@@ -77,6 +77,15 @@ def get_spark(
         master = f"local[{cpus}]"
     if master:
         builder = builder.master(master)
+    for k, v in _session_confs(extra_confs).items():
+        builder = builder.config(k, v)
+    return builder.getOrCreate()
+
+
+def _session_confs(extra_confs: dict[str, str] | None = None) -> dict[str, str]:
+    """The confs get_spark applies: DEFAULT_CONFS, then the host
+    derived ones, then ``extra_confs`` (explicit keys win); the heap
+    pre-touch options come last, sized from the MERGED driver memory."""
     confs = dict(DEFAULT_CONFS)
     # scale shuffle width with the configured parallelism (2 waves;
     # AQE coalesces small stages back down) — a fixed 32 starves
@@ -85,6 +94,11 @@ def get_spark(
     cpus_env = os.environ.get("SPARK_GRAFT_CPUS", "")
     if cpus_env.isdigit():
         confs["spark.sql.shuffle.partitions"] = str(max(32, 2 * int(cpus_env)))
+    local_dirs = _local_dirs()
+    if local_dirs:
+        confs["spark.local.dir"] = local_dirs
+    if extra_confs:
+        confs.update(extra_confs)
     # Commit + pre-fault the whole heap at JVM start (-Xms=driver mem,
     # AlwaysPreTouch). Root-caused in round 7: with a growable heap,
     # G1's incremental commits landed page-fault storms INSIDE timed
@@ -94,22 +108,16 @@ def get_spark(
     # to session startup (~40 s for 24 GB in this sandbox), outside
     # every timed region; on a real cluster Xms=Xmx is standard
     # practice for exactly this reason. SPARK_GRAFT_PRETOUCH=0 opts
-    # out (e.g. for short-lived CLI invocations).
+    # out (e.g. for short-lived CLI invocations, or hosts with less
+    # RAM than the driver memory).
     if os.environ.get("SPARK_GRAFT_PRETOUCH", "1") != "0":
-        heap = confs.get("spark.driver.memory", "24g")
+        heap = confs["spark.driver.memory"]
         gc_threads = os.cpu_count() or 8
         confs.setdefault(
             "spark.driver.extraJavaOptions",
             f"-Xms{heap} -XX:+AlwaysPreTouch -XX:ParallelGCThreads={gc_threads}",
         )
-    local_dirs = _local_dirs()
-    if local_dirs:
-        confs["spark.local.dir"] = local_dirs
-    if extra_confs:
-        confs.update(extra_confs)
-    for k, v in confs.items():
-        builder = builder.config(k, v)
-    return builder.getOrCreate()
+    return confs
 
 
 def load_tables(spark: SparkSession, sf_dir: str, *names: str):

@@ -96,6 +96,17 @@ def test_candidate_scores_arrow_equals_expr(spark):
     assert len(a) == 20 * 20
 
 
+def test_candidate_scores_empty_target(spark):
+    """No targets: both plans return an empty (src_id, tgt_id, qcos)
+    relation — the arrow path must not unit-normalize a (0,) matrix."""
+    df = _emb_df(spark, [(0, _unit(1.0, 0.0)), (1, _unit(0.0, 1.0))])
+    empty = df.filter("vec_id < 0")
+    for impl in ("expr", "arrow"):
+        out = candidate_scores(df, empty, impl=impl)
+        assert out.columns == ["src_id", "tgt_id", "qcos"], impl
+        assert out.collect() == [], impl
+
+
 def test_candidate_scores_impl_validation(spark):
     df = _emb_df(spark, [(0, _unit(1.0, 0.0)), (1, _unit(0.0, 1.0))])
     with pytest.raises(ValueError, match="unknown impl"):

@@ -7,6 +7,7 @@ LOD pyramid mass-conservation invariant."""
 import math
 
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 from fujishadergpu_spark.functions.tiles import TILE_PX, np_tile_pixel, tile_pixel
@@ -15,6 +16,7 @@ from fujishadergpu_spark.operators.tile_kernels import (
     np_hillshade,
     rasterize_tiles,
     tile_kernel,
+    tile_kernel_stats,
 )
 
 Z = 3  # 8x8 tiles -> 2048px world; test data spans tiles 3..4 only
@@ -146,3 +148,52 @@ def test_pyramid_mass_conservation(spark, points_df):
     n = points_df.count()
     for z_, total in totals.items():
         assert abs(total - n) < 1e-6, f"mass lost at z={z_}"
+
+
+@pytest.fixture(scope="module")
+def ring_points(spark):
+    """A dense ring enclosing an empty interior: at z=6 the enclosed
+    hole spans whole point-less tiles that a fill surface synthesizes."""
+    import pandas as pd
+
+    t = np.arange(4000) * (2 * np.pi / 4000)
+    return spark.createDataFrame(
+        pd.DataFrame({"lat": 20.0 + 12.0 * np.sin(t), "lon": 30.0 + 12.0 * np.cos(t)})
+    )
+
+
+@pytest.mark.parametrize("kernel", ["hillshade", "slope"])
+@pytest.mark.parametrize("mode", ["plain", "metric", "filled"])
+def test_stats_path_matches_grid_path(spark, points_df, ring_points, kernel, mode):
+    """tile_kernel_stats(grid_dtype=float64) reduces exactly the core
+    tile_kernel returns: same tiles (synthesized fill tiles included),
+    bit-equal shade_sum / shade_max / lit_pixels."""
+    from fujishadergpu_spark.operators.void_fill import build_void_fill_surface
+
+    pts, z, kw = points_df, Z, {}
+    if mode == "metric":
+        kw["metric_scale"] = True
+    elif mode == "filled":
+        pts, z = ring_points, 6
+        kw["fill_surface"] = build_void_fill_surface(ring_points, z, mode="enclosed")
+    grids = {
+        (r["x"], r["y"]): np.asarray(r["result"]).reshape(TILE_PX, TILE_PX)
+        for r in tile_kernel(pts, z, kernel=kernel, **kw).collect()
+    }
+    stats = {
+        (r["x"], r["y"]): (r["shade_sum"], r["shade_max"], r["lit_pixels"])
+        for r in tile_kernel_stats(pts, z, kernel=kernel, grid_dtype=np.float64, **kw).collect()
+    }
+    if mode == "filled":
+        present = {(r["x"], r["y"]) for r in rasterize_tiles(pts, z).collect()}
+        assert set(grids) - present, "no point-less tile was synthesized"
+    assert set(stats) == set(grids)
+    for key, g in grids.items():
+        # the operator reduces the cropped view of the halo-expanded
+        # (258)^2 output; summing the same strided view keeps numpy's
+        # summation order, so the float64 sums compare bit-exactly
+        win = np.zeros((TILE_PX + 2, TILE_PX + 2))
+        win[1:-1, 1:-1] = g
+        core = win[1:-1, 1:-1]
+        want = (float(core.sum(dtype=np.float64)), float(core.max()), int((core > 0.75).sum()))
+        assert stats[key] == want, f"{kernel}/{mode}: tile {key}"
